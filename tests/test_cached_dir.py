@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from nibbler_spark.sources.tables import cached_dir
 
@@ -69,4 +71,30 @@ def test_regenerated_testdata_gets_fresh_cache_key(tmp_path):
     # regenerate the source table with different size ⇒ different key
     _make_sf(tmp_path, b"v2" * 99)
     d2 = cached_dir(sf, "events", "t3", build)
+    assert d1 != d2
+
+
+def test_same_size_rewrite_within_a_second_gets_fresh_cache_key(tmp_path):
+    """A same-size rewrite 1 µs later must not alias the old cache (a
+    whole-second mtime in the key could not tell the two apart)."""
+    sf = _make_sf(tmp_path, b"v1" * 50)
+    src = os.path.join(sf, "events.parquet")
+    t0 = 1_700_000_000_500_000_000
+    os.utime(src, ns=(t0, t0))
+    calls = []
+
+    def build(tmp):
+        calls.append(tmp)
+        os.makedirs(tmp)
+
+    # The fixed mtimes give fixed keys, so a per-run kind keeps a cache
+    # left by an earlier run from answering.
+    kind = f"t4-{uuid.uuid4().hex[:8]}"
+    d1 = cached_dir(sf, "events", kind, build)
+    _make_sf(tmp_path, b"v2" * 50)
+    os.utime(src, ns=(t0, t0 + 1_000))
+    d2 = cached_dir(sf, "events", kind, build)
+    for d in {d1, d2}:
+        shutil.rmtree(d)
+    assert len(calls) == 2, "the rewritten source must be built again"
     assert d1 != d2
