@@ -11,8 +11,7 @@ from __future__ import annotations
 
 import enum
 from collections.abc import Callable
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass
 
 from nibbler_spark.errors import NibblerValidationError
 
@@ -60,8 +59,6 @@ class Config:
     processing_timeout_s: float = 0.0
     resume_after_err: bool = False
     processor_err: ProcessorErrCallback | None = None
-    # Extension knobs (no reference counterpart; used by the Spark transport)
-    extra: dict[str, Any] = field(default_factory=dict)
 
     def sanitize(self) -> "Config":
         """Apply reference defaults in place (nibbler.go:48-60)."""

@@ -13,8 +13,11 @@ Maps the reference surface 1:1 (/root/reference/nibbler.go):
 - ``nib.listen()``     ≡ ``Listen`` (nibbler.go:125-150, R17): a single
   consumer thread selecting over ticker vs queue; batches are strictly
   sequential and FIFO order is preserved.
+- ``nib.close()`` (extension): queues a close sentinel behind the pending
+  items; the listener drains the queue up to it, flushes the partial
+  buffer when it reaches it, and exits.
 
-The size-OR-time flush semantics themselves live in
+The size-OR-time flush semantics and the stop state live in
 :class:`~nibbler_spark.streaming.rebatcher.ReBatcher`; this module adds
 the channel, the listener thread, and lifecycle. For the distributed
 path, see ``nibbler_spark.streaming.transport`` (Structured Streaming).
@@ -31,9 +34,12 @@ from nibbler_spark.config import Config
 from nibbler_spark.errors import NibblerFatalError, NibblerStoppedError
 from nibbler_spark.streaming.rebatcher import ReBatcher
 
-# Sentinel waking the listener for graceful close (extension: the
-# reference has no stop API — its goroutine runs for the process life).
+# Sentinels close() queues behind the pending items; the listener stops
+# on reaching one, flushing the partial buffer first for _FLUSH_CLOSE
+# (extension: the reference has no stop API — its goroutine runs for the
+# process life).
 _CLOSE = object()
+_FLUSH_CLOSE = object()
 
 
 class Receiver:
@@ -57,14 +63,10 @@ class Nibbler:
         # sanitize+validate happen in ReBatcher construction (≡ New,
         # nibbler.go:176-179 — errors surface before any thread starts).
         self._rb = ReBatcher(config, clock=clock)
-        self._clock = clock
         # Bounded ingestion queue: producers block when `size` items are
         # queued and the listener is busy (nibbler.go:184, R3).
         self._queue: _queue.Queue = _queue.Queue(maxsize=self._rb.cfg.size)
         self._thread: threading.Thread | None = None
-        self._closing = False
-        self._fatal = threading.Event()
-        self._fatal_error: BaseException | None = None
 
     # -- producer side -------------------------------------------------------
 
@@ -72,9 +74,9 @@ class Nibbler:
         return Receiver(self)
 
     def _send(self, item, timeout: float | None = None) -> None:
-        if self._fatal.is_set():
+        if self._rb.stopped:
             raise NibblerStoppedError(
-                f"send after fatal stop: {self._fatal_error!r}"
+                f"send after fatal stop: {self._rb.fatal_error!r}"
             )
         self._queue.put(item, timeout=timeout)
 
@@ -93,7 +95,7 @@ class Nibbler:
 
     def _listen_loop(self) -> None:
         rb = self._rb
-        while not self._closing:
+        while True:
             # select { ticker | receive } — wait for an item at most until
             # the next ticker deadline (nibbler.go:152-166).
             wait = min(rb.seconds_until_tick(), 1.0)
@@ -102,50 +104,39 @@ class Nibbler:
             except _queue.Empty:
                 item = None
             try:
-                if item is _CLOSE:
+                if item is _FLUSH_CLOSE:
+                    rb.flush()
+                if item is _CLOSE or item is _FLUSH_CLOSE:
                     return
                 if item is not None:
                     rb.push(item)
                 rb.poll()
-            except NibblerFatalError as exc:
+            except (NibblerFatalError, NibblerStoppedError):
                 # ≡ break + deferred close(queue) (nibbler.go:131-135,
-                # 142-144): mark fatal so subsequent sends raise.
-                self._fatal_error = exc.error
-                self._fatal.set()
-                return
-            except NibblerStoppedError:
+                # 142-144): the re-batcher is stopped, so sends raise.
                 return
 
     # -- lifecycle (extension) ------------------------------------------------
 
     @property
     def fatal_error(self) -> BaseException | None:
-        return self._fatal_error
+        return self._rb.fatal_error
 
     def close(self, flush: bool = True, timeout: float = 10.0) -> None:
-        """Graceful stop (extension — the reference never stops). Drains
-        the queue, optionally flushes the partial buffer, joins the
-        listener."""
+        """Graceful stop (extension — the reference never stops). Queues
+        the close sentinel behind the pending items; the listener drains
+        up to it, flushes the partial buffer if ``flush``, and exits. One
+        ``timeout`` bounds the put and the join; nothing is queued after a
+        fatal stop."""
         if self._thread is None:
             return
         deadline = time.monotonic() + timeout
-        while not self._queue.empty() and time.monotonic() < deadline:
-            if self._fatal.is_set():
-                break
-            time.sleep(0.01)
-        self._closing = True
-        try:
-            self._queue.put_nowait(_CLOSE)
-        except _queue.Full:
-            pass
-        self._thread.join(timeout=max(0.0, deadline - time.monotonic()))
-        if flush and not self._fatal.is_set():
+        if not self._rb.stopped:
             try:
-                self._rb.flush()
-            except (NibblerFatalError, NibblerStoppedError) as exc:
-                err = exc.error if isinstance(exc, NibblerFatalError) else exc
-                self._fatal_error = err
-                self._fatal.set()
+                self._queue.put(_FLUSH_CLOSE if flush else _CLOSE, timeout=timeout)
+            except _queue.Full:
+                pass
+        self._thread.join(timeout=max(0.0, deadline - time.monotonic()))
 
 
 def start(config: Config, clock: Callable[[], float] = time.monotonic) -> Nibbler:

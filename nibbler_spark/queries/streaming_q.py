@@ -117,6 +117,8 @@ def _drain_to_memory(
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Run an availableNow pass into a memory sink; return the final table.
+    It sets no checkpointLocation: Spark's temporary checkpoint is deleted
+    when the pass stops cleanly.
 
     ``shuffle_partitions`` sizes the STATE STORE for this query: Spark
     pins a stateful query's state-partition count to
@@ -148,9 +150,6 @@ def _drain_to_memory(
             df_writer_source.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-            )
             .trigger(availableNow=True)
             .start()
         )
@@ -970,7 +969,6 @@ def a08_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         sel.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="nibbler-fb-"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1415,10 +1413,6 @@ def a16_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             _read_stream(spark, d)
             .writeStream.foreachBatch(fan_out)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="nibbler-ck-"),
-            )
             .trigger(availableNow=True)
             .start()
         )
@@ -1836,9 +1830,6 @@ def ext_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
         .writeStream.foreachBatch(merge_epoch)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-cms-")
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -2079,9 +2070,6 @@ def ext_stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -2779,9 +2767,6 @@ def i24_rate_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
         .trigger(processingTime="0 seconds")
         .start()
     )
@@ -3092,9 +3077,6 @@ def ext_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -3288,9 +3270,6 @@ def i27_stream_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -3480,9 +3459,6 @@ def i28_stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -3622,9 +3598,6 @@ def i29_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -3765,9 +3738,6 @@ def i30_stream_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         parsed.writeStream.foreachBatch(route)
         .option("maxFilesPerTrigger", 1)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -3841,9 +3811,6 @@ def i31_stream_backfill_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(live_src + "/half=*/")
         .writeStream.foreachBatch(seam)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -3929,10 +3896,6 @@ def i32_kappa_reprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src + "/half=*/")
             .writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix=f"nibbler-ck-{version}-"),
-            )
             .trigger(availableNow=True)
             .start()
         )
@@ -4042,10 +4005,6 @@ def ext_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
         .writeStream.foreachBatch(merge_epoch)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="nibbler-dds-"),
-        )
         .trigger(availableNow=True)
         .start()
     )
@@ -4154,10 +4113,6 @@ def i33_stream_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 2)
             .parquet(d)
             .writeStream.foreachBatch(backfill)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="nibbler-srw-ck-"),
-            )
             .trigger(availableNow=True)
             .start()
         )
@@ -4388,10 +4343,6 @@ def i35_stream_incremental_profile(
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
         .writeStream.foreachBatch(fold)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="nibbler-prof-"),
-        )
         .trigger(availableNow=True)
         .start()
     )

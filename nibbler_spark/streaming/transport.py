@@ -18,15 +18,19 @@ in-memory batch.
 
 At-most-once fidelity (SURVEY §2.2.1): the reference drops failed batches
 and never retries. We therefore run WITHOUT checkpoint-replay semantics
-by default (fresh checkpoint dir per run); checkpoint-based recovery is
-an explicit extension knob (``checkpoint_dir=``).
+by default: with no ``checkpoint_dir`` the query runs on Spark's
+temporary checkpoint, which Spark deletes when the query stops cleanly.
+Checkpoint-based recovery is the explicit extension knob
+(``checkpoint_dir=``).
+
+The stop state (R9) lives only in the re-batcher, which is marked stopped
+before ``processor_err`` runs.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import tempfile
 import threading
 import time
 import uuid
@@ -61,7 +65,7 @@ class FileDropReceiver:
         self.send_many([item])
 
     def send_many(self, items) -> None:
-        if self._stream is not None and self._stream.fatal_error is not None:
+        if self._stream is not None and self._stream.rebatcher.stopped:
             raise NibblerStoppedError(
                 f"send after fatal stop: {self._stream.fatal_error!r}"
             )
@@ -106,9 +110,7 @@ class NibblerStream:
         self.rebatcher = ReBatcher(config)
         self.cfg = self.rebatcher.cfg
         self._source = source
-        self._checkpoint = checkpoint_dir or tempfile.mkdtemp(
-            prefix="nibbler-ckpt-"
-        )
+        self._checkpoint = checkpoint_dir
         # Trigger/poll cadence: a fraction of the ticker so TICKER flushes
         # land close to their deadline (SURVEY §4.3 step 1).
         self._cadence = poll_interval_s or max(
@@ -122,14 +124,12 @@ class NibblerStream:
         self.query = None
         self._poller: threading.Thread | None = None
         self._stop_poller = threading.Event()
-        self._fatal_error: BaseException | None = None
 
     @property
     def fatal_error(self) -> BaseException | None:
-        return self._fatal_error
+        return self.rebatcher.fatal_error
 
-    def _handle_fatal(self, exc: NibblerFatalError) -> None:
-        self._fatal_error = exc.error
+    def _stop_query(self) -> None:
         # Fail the query like the reference closes the queue (R9): stop
         # consuming; await_termination() then re-raises the error.
         try:
@@ -139,8 +139,8 @@ class NibblerStream:
             pass
 
     def _foreach_batch(self, df: DataFrame, epoch_id: int) -> None:
-        if self._fatal_error is not None:
-            raise NibblerFatalError(self._fatal_error)
+        if self.rebatcher.stopped:
+            raise NibblerFatalError(self.rebatcher.fatal_error)
         # Bounded by source admission control ≈ size rows per trigger, so
         # a driver-side collect here mirrors the reference's in-memory
         # batch (SURVEY §2.3 design rule exception).
@@ -150,26 +150,26 @@ class NibblerStream:
             rows = df.collect()
         try:
             self.rebatcher.push_many(rows)
-        except NibblerFatalError as exc:
-            self._handle_fatal(exc)
+        except NibblerFatalError:
+            self._stop_query()
             raise
 
     def _poll_loop(self) -> None:
         while not self._stop_poller.wait(self._cadence):
             try:
                 self.rebatcher.poll()
-            except NibblerFatalError as exc:
-                self._handle_fatal(exc)
+            except NibblerFatalError:
+                self._stop_query()
                 return
             except NibblerStoppedError:
                 return
 
     def start(self) -> "NibblerStream":
-        writer = (
-            self._source.writeStream.foreachBatch(self._foreach_batch)
-            .option("checkpointLocation", self._checkpoint)
-            .trigger(processingTime=f"{int(self._cadence * 1000)} milliseconds")
+        writer = self._source.writeStream.foreachBatch(self._foreach_batch).trigger(
+            processingTime=f"{int(self._cadence * 1000)} milliseconds"
         )
+        if self._checkpoint is not None:
+            writer = writer.option("checkpointLocation", self._checkpoint)
         self.query = writer.start()
         self._poller = threading.Thread(
             target=self._poll_loop, name="nibbler-ticker", daemon=True
@@ -191,19 +191,19 @@ class NibblerStream:
             self.query.stop()
         if self._poller is not None:
             self._poller.join(timeout=5)
-        if flush and self._fatal_error is None:
+        if flush and not self.rebatcher.stopped:
             try:
                 self.rebatcher.flush()
             except (NibblerFatalError, NibblerStoppedError):
-                self._fatal_error = self.rebatcher.fatal_error
+                pass  # the re-batcher holds the error (fatal_error)
 
     def await_termination(self, timeout: float | None = None) -> None:
         """Block until the query ends; re-raise a fatal processor error
         (≡ awaitTermination surfacing StreamingQueryException, R9)."""
         if self.query is not None:
             self.query.awaitTermination(timeout)
-        if self._fatal_error is not None:
-            raise NibblerFatalError(self._fatal_error)
+        if self.rebatcher.fatal_error is not None:
+            raise NibblerFatalError(self.rebatcher.fatal_error)
 
 
 def start_file_stream(

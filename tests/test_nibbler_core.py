@@ -387,3 +387,119 @@ def test_at_most_once_under_task_retry():
     # and the retries were real: first attempts failed, seconds ran
     assert res["attempt0_markers"] >= 1
     assert res["attempt1_markers"] >= 1
+
+
+# ---------------------------------------------------------------------------
+# Graceful close (extension): the listener drains the queue up to the close
+# sentinel and flushes the partial buffer when it reaches it.
+# ---------------------------------------------------------------------------
+
+
+def test_close_with_full_queue_delivers_everything_once_in_order():
+    """A slow processor holds the listener while the queue fills; close()
+    then waits behind the queued items. Every item is delivered exactly
+    once in FIFO order and the last flush is the partial buffer."""
+    got: list[tuple[list, Trigger]] = []
+    entered, release = threading.Event(), threading.Event()
+
+    def processor(_dl, trig, batch):
+        got.append((list(batch), trig))
+        entered.set()
+        release.wait(5.0)
+
+    clock = FakeClock()
+    nib = start(Config(processor=processor, size=4, ticker_s=1.0),
+                clock=clock.monotonic)
+    recv = nib.receiver()
+    recv.send(0)
+    deadline = time.monotonic() + 5.0
+    while nib._rb.buffered < 1 and time.monotonic() < deadline:
+        time.sleep(0.001)
+    clock.advance(1.0)
+    recv.send(1)  # its poll fires the ticker: the slow flush of [0, 1]
+    assert entered.wait(5.0)
+    recv.send_many([2, 3, 4, 5])
+    assert nib._queue.full()
+    clock.advance(1.0)  # the slow batch outlasts a ticker period
+    threading.Timer(0.2, release.set).start()
+    nib.close(timeout=5.0)
+    assert got == [
+        ([0, 1], Trigger.TICKER),
+        ([2], Trigger.TICKER),  # the tick missed while the processor ran
+        ([3, 4, 5], Trigger.TICKER),  # the partial buffer, flushed by close
+    ]
+    assert nib.fatal_error is None
+    assert not nib._thread.is_alive()
+
+
+def test_close_without_flush_drops_the_partial_buffer():
+    got: list[list] = []
+    nib = start(Config(processor=lambda _dl, _t, b: got.append(list(b)),
+                       size=4, ticker_s=60.0))
+    nib.receiver().send_many(range(6))
+    nib.close(flush=False)
+    assert got == [[0, 1, 2, 3]]
+    assert not nib._thread.is_alive()
+
+
+def test_close_after_fatal_stop_does_not_flush_and_is_bounded():
+    """After a fatal stop close() flushes nothing (the failed batch stays
+    undelivered) and returns within its timeout although the queue is
+    full and no listener drains it."""
+    boom = RuntimeError("boom")
+    calls: list[list] = []
+    release = threading.Event()
+
+    def processor(_dl, _t, batch):
+        calls.append(list(batch))
+        release.wait(5.0)
+        raise boom
+
+    nib = start(Config(processor=processor, size=2, ticker_s=60.0))
+    recv = nib.receiver()
+    recv.send_many([0, 1])  # the failing flush holds the listener
+    recv.send_many([2, 3])  # fills the queue
+    release.set()
+    deadline = time.monotonic() + 5.0
+    while nib._thread.is_alive() and time.monotonic() < deadline:
+        time.sleep(0.01)
+    assert nib.fatal_error is boom
+    t0 = time.monotonic()
+    nib.close(timeout=1.0)
+    assert time.monotonic() - t0 < 1.0
+    assert calls == [[0, 1]]
+
+
+def test_close_after_concurrent_producers_delivers_each_item_once():
+    """Stress: more producer threads than cores, a short switch interval
+    and a fast ticker; once the producers return, close() delivers every
+    item exactly once, in each producer's FIFO order."""
+    import sys
+
+    producers, per = 8, 100
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for _ in range(10):
+            got: list[int] = []
+            nib = start(Config(processor=lambda _dl, _t, b: got.extend(b),
+                               size=7, ticker_s=0.01))
+            recv = nib.receiver()
+            threads = [
+                threading.Thread(target=recv.send_many,
+                                 args=(range(k * per, (k + 1) * per),))
+                for k in range(producers)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(10.0)
+                assert not t.is_alive()
+            nib.close(timeout=10.0)
+            assert not nib._thread.is_alive()
+            assert sorted(got) == list(range(producers * per))
+            for k in range(producers):
+                mine = [x for x in got if k * per <= x < (k + 1) * per]
+                assert mine == list(range(k * per, (k + 1) * per))
+    finally:
+        sys.setswitchinterval(old)
